@@ -64,20 +64,8 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production deployment route: injected functions + optimizer
-      // rules (LevenshteinThresholdRule) live in the gate session too
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(master = s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
-    // bounded-window WARN suppression, same rationale as Bench.main
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
     run(spark, sfDir, outDir, queries, SparkEntry.oracleSql)

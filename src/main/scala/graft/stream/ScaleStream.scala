@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -78,17 +78,11 @@ object ScaleStream {
     val sfDir = args(0)
     val outPath = if (args.length > 1) args(1) else "/root/repo/STREAM_OUT.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(NearDedupStream.rocksDbConf._1, NearDedupStream.rocksDbConf._2)
-      // both replays run ~50 (data + no-data) micro-batches; keep every
-      // progress sample so the state series in the artifact is complete
-      .config("spark.sql.streaming.numRecentProgressUpdates", "400")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = s"local[$cpus]")
+    spark.conf.set(NearDedupStream.rocksDbConf._1, NearDedupStream.rocksDbConf._2)
+    // both replays run ~50 (data + no-data) micro-batches; keep every
+    // progress sample so the state series in the artifact is complete
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "400")
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
     def loadavg(): String =
